@@ -48,11 +48,11 @@ EMPTY = 0.004  # empty tokens array
 SIZES = {
     "seq_flagship": {"rows": 50_000, "files": 4, "parts": 8},
     "json_docs": {"rows": 8_000, "files": 4, "parts": 4},
-    "ckpt": {"rows": 9_000, "parts": 6},
-    "stream": {"rows_per_file": 5_000, "files": 3},
+    "ckpt": {"rows": 6_000, "parts": 4},
+    "stream": {"rows_per_file": 3_000, "files": 3},
 }
-# the inputs each workload reads
-INPUTS = {"seq_flagship": ("seq_flagship",), "json_docs": ("json_docs",),
+# the inputs each workload reads, one per part
+INPUTS = {"batch": ("seq_flagship", "json_docs"),
           "incremental": ("ckpt", "stream")}
 # event time of the first stream file; hour-aligned, so no 5-minute window
 # spans two files

@@ -120,9 +120,13 @@ def session(work: str, event_log: str | None = None):
         # the collector has grown and touched the heap so far, which
         # differed by up to 30% between identical short runs; a long-lived
         # JVM reaches its full heap anyway.
+        # C1 only (TieredStopAtLevel=1).  With the optimizing compiler, about
+        # one run in four settled where the flagship took twice the time
+        # and JVM CPU of the others, for the whole run; a run of seconds
+        # cannot average that out.  C1 reaches its plateau in one unit.
         .config("spark.driver.extraJavaOptions",
                 f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData "
-                f"-Xms{mem}m -XX:+AlwaysPreTouch")
+                f"-Xms{mem}m -XX:+AlwaysPreTouch -XX:TieredStopAtLevel=1")
         .config("spark.sql.shuffle.partitions", str(n))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.catalogImplementation", "in-memory")

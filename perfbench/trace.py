@@ -28,82 +28,84 @@ LAYERS = {
     "spec.build_s": ("s", "setup_s on all workloads", "-", True),
     "engine.compile.wall_s": (
         "s", "setup_s on all workloads; op_s_p50 on incremental",
-        "rows_per_s on seq_flagship", True),
+        "rows_per_s on batch (flagship part)", True),
     "engine.compile.py4j_calls": (
         "count", "setup_s on all workloads", "-", True),
     "engine.compile.cache_hit_ratio": (
         "ratio", "op_s_p50 on incremental", "-", True),
     "engine.build_s": (
-        "s", "op_s_p50 on incremental", "seq_flagship (small share)", True),
+        "s", "op_s_p50 on incremental", "batch (small share)", True),
     "engine.build_py4j_calls": (
-        "count", "op_s_p50 on incremental", "seq_flagship", True),
+        "count", "op_s_p50 on incremental", "batch", True),
     "engine.run.build_s": (
-        "s", "op_s_p50 on incremental", "seq_flagship", False),
+        "s", "op_s_p50 on incremental", "batch", False),
     "engine.run.py4j_calls": (
-        "count", "op_s_p50 on incremental", "seq_flagship", False),
+        "count", "op_s_p50 on incremental", "batch", False),
     "engine.run.build_jobs": (
-        "count", "op_s_p50 on incremental", "seq_flagship", False),
+        "count", "op_s_p50 on incremental", "batch", False),
     "engine.verdict_counts.build_s": (
-        "s", "op_s_p50 on seq_flagship", "-", False),
-    "exec.job_s": ("s", "rows_per_s, op_s_p50 on seq_flagship",
-                   "json_docs", True),
+        "s", "op_s_p50 on batch (flagship part)", "-", False),
+    "exec.job_s": ("s", "rows_per_s, op_s_p50 on batch (flagship part)",
+                   "batch (json part)", True),
     "exec.jobs": ("count", "op_s_p50 on incremental",
                   "-", True),
     "exec.tasks": ("count", "op_s_p50 on incremental", "-", True),
-    "exec.executor_run_s": ("s", "rows_per_s on seq_flagship",
-                            "json_docs", True),
-    "exec.executor_cpu_s": ("s", "cpu_s_per_Mrow on seq_flagship",
-                            "json_docs", True),
-    "exec.gc_s": ("s", "op_s_p50, peak_rss_mb on seq_flagship", "-", True),
+    "exec.executor_run_s": ("s", "rows_per_s on batch (flagship part)",
+                            "batch (json part)", True),
+    "exec.executor_cpu_s": ("s", "cpu_s_per_Mrow on batch (flagship part)",
+                            "batch (json part)", True),
+    "exec.gc_s": ("s", "op_s_p50, peak_rss_mb on batch (flagship part)",
+                  "-", True),
     "exec.sched_delay_s": ("s", "op_s_p50 on incremental",
-                           "seq_flagship", True),
-    "exec.input_rows": ("count", "rows_per_s on seq_flagship",
-                        "json_docs", True),
-    "exec.shuffle_write_bytes": ("bytes", "op_s_p50 on seq_flagship",
-                                 "json_docs", True),
-    "exec.spill_bytes": ("bytes", "op_s_p50 on seq_flagship", "-", False),
-    "exec.task_skew": ("ratio", "op_s_p50 on seq_flagship (hot key)",
-                       "json_docs", True),
+                           "batch", True),
+    "exec.input_rows": ("count", "rows_per_s on batch (flagship part)",
+                        "batch (json part)", True),
+    "exec.shuffle_write_bytes": ("bytes", "op_s_p50 on batch (flagship part)",
+                                 "batch (json part)", True),
+    "exec.spill_bytes": ("bytes", "op_s_p50 on batch (flagship part)",
+                         "-", False),
+    "exec.task_skew": ("ratio", "op_s_p50 on batch (flagship part, hot key)",
+                       "batch (json part)", True),
     "pyworker.cpu_share": ("ratio", "rows_per_s, cpu_s_per_Mrow on "
-                           "json_docs", "zero on the other two", True),
-    "pyworker.cpu_s": ("s", "cpu_s_per_Mrow on json_docs",
-                       "zero on the other two", False),
-    "pyworker.cpu_us_per_row": ("us/row", "rows_per_s on json_docs",
-                                "zero on the other two", False),
-    "pyworker.peak_rss_mb": ("MB", "peak_rss_mb on json_docs",
-                             "zero on the other two", True),
-    "json.udf_nodes": ("count", "rows_per_s on json_docs",
-                       "zero on the other two", True),
+                           "batch (json part)", "zero on incremental", True),
+    "pyworker.cpu_s": ("s", "cpu_s_per_Mrow on batch (json part)",
+                       "zero on incremental", False),
+    "pyworker.cpu_us_per_row": ("us/row", "rows_per_s on batch (json part)",
+                                "zero on incremental", False),
+    "pyworker.peak_rss_mb": ("MB", "peak_rss_mb on batch (json part)",
+                             "zero on incremental", True),
+    "json.udf_nodes": ("count", "rows_per_s on batch (json part)",
+                       "zero on incremental", True),
     "checkpoint.batch_s_p50": ("s", "op_s_p50 on incremental",
-                               "other workloads", False),
+                               "batch", False),
     "checkpoint.manifest_s": ("s", "op_s_p50 on incremental",
-                              "other workloads", False),
+                              "batch", False),
     "checkpoint.jobs_per_batch": ("count", "op_s_p50 on incremental",
-                                  "other workloads", True),
+                                  "batch", True),
     "checkpoint.py4j_per_batch": ("count", "op_s_p50 on incremental",
-                                  "other workloads", True),
+                                  "batch", True),
     "checkpoint.global_s": ("s", "rows_per_s on incremental",
-                            "other workloads", False),
+                            "batch", False),
     "checkpoint.scan_amplification": (
-        "ratio", "rows_per_s on incremental", "other workloads", True),
+        "ratio", "rows_per_s on incremental", "batch", True),
     "stream.startup_s": ("s", "rows_per_s on incremental",
-                         "other workloads", False),
+                         "batch", False),
     "stream.batch_s_p50": ("s", "op_s_p50 on incremental",
-                           "other workloads", False),
+                           "batch", False),
     "stream.addBatch_s": ("s", "op_s_p50 on incremental",
-                          "other workloads", False),
+                          "batch", False),
     "stream.queryPlanning_s": ("s", "op_s_p50 on incremental",
-                               "other workloads", False),
+                               "batch", False),
     "stream.walCommit_s": ("s", "op_s_p50 on incremental",
-                           "other workloads", False),
+                           "batch", False),
     "stream.commitOffsets_s": ("s", "op_s_p50 on incremental",
-                               "other workloads", False),
+                               "batch", False),
     "stream.latestOffset_s": ("s", "op_s_p50 on incremental",
-                              "other workloads", False),
+                              "batch", False),
     "stream.state_rows": ("count", "peak_rss_mb on incremental",
-                          "other workloads", True),
+                          "batch", True),
     "stream.state_commit_s": ("s", "op_s_p50 on incremental",
-                              "other workloads", False),
+                              "batch", False),
     "driver.cpu_s": ("s", "cpu_s_per_Mrow on all workloads", "-", True),
     "jvm.cpu_s": ("s", "cpu_s_per_Mrow on all workloads", "-", True),
     "py4j.calls": ("count", "op_s_p50 on incremental", "-", True),

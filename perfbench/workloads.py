@@ -2,21 +2,26 @@
 
 A workload opens its input and builds its spec in ``setup``; each ``call``
 then runs one closed-loop unit of work and returns its operation
-latencies with a ``verify`` closure that checks every operation's output
-against the expected outputs from :mod:`data` (run outside timing).
+latencies, by kind of operation, with a ``verify`` closure that checks
+every operation's output against the expected outputs from :mod:`data`.
 
-* ``seq_flagship`` — gate (``verdict_counts``) + ``run`` on the sequences
-  table; one operation = gate + full run.
-* ``json_docs``    — ``run`` on documents with JSON and map columns; one
-  operation = one run.
-* ``incremental``  — validation in small increments, one unit running both
-  parts below; one operation = one batch or one micro-batch:
+Each workload runs two parts, one after the other, in every unit:
 
-  - ``ResumableValidation.run`` with batch size 1 over a table stored
-    partitioned by the batch column (the closing global uniqueness/FK
-    phase counts as one more operation);
-  - ``stream_violations`` and ``windowed_verdicts`` over a file-source
-    stream, one file per trigger.
+* ``batch``       — whole-table validation:
+
+  - ``flagship``: gate (``verdict_counts``) + ``run`` on the sequences
+    table; one operation = gate + full run;
+  - ``json``: ``run`` on documents with JSON and map columns; one
+    operation = one run.
+
+* ``incremental`` — validation in small increments:
+
+  - ``checkpoint``: ``ResumableValidation.run`` with batch size 1 over a
+    table stored partitioned by the batch column; one operation = one
+    batch (the closing global uniqueness/FK phase counts as one more);
+  - ``stream.violations`` / ``stream.verdicts``: ``stream_violations`` and
+    ``windowed_verdicts`` over a file-source stream, one file per trigger;
+    one operation = one micro-batch.
 """
 
 from __future__ import annotations
@@ -85,7 +90,7 @@ class Call:
 
     wall_s: float  # timed wall time of the unit
     rows: int  # input rows validated
-    ops: list[float]  # latency of each operation in the unit
+    ops: dict[str, list[float]]  # latency of each operation, by kind
     verify: Callable[[], list[bool]]  # per-operation correctness
     layer: dict = field(default_factory=dict)  # workload-specific traces
 
@@ -166,7 +171,7 @@ class Workload:
 
 
 class SeqFlagship(Workload):
-    name = "seq_flagship"
+    """The ``flagship`` part of ``batch``."""
 
     def setup(self) -> None:
         self.suite = self._suite(SEQ_COLUMNS, SEQ_ROW_CHECKS,
@@ -200,11 +205,11 @@ class SeqFlagship(Workload):
                     and _as_verdicts(verdicts) == exp["verdicts"]
                     and _as_checksums(sums) == exp["checksums"]]
 
-        return Call(dt, exp["rows"], [dt], verify)
+        return Call(dt, exp["rows"], {"flagship": [dt]}, verify)
 
 
 class JsonDocs(Workload):
-    name = "json_docs"
+    """The ``json`` part of ``batch``."""
 
     def setup(self) -> None:
         self.suite = self._suite(JSON_COLUMNS, draft=2020)
@@ -215,14 +220,14 @@ class JsonDocs(Workload):
     def call(self) -> Call:
         tr, suite, df = self.tr, self.suite, self.df
         t0 = time.perf_counter()
-        tr.group("build")
+        tr.group("json.build")
         res = suite.run(df, partition_col="part")
-        tr.group("violations")
+        tr.group("json.violations")
         agg = _checksums(res.violations)
-        with tr.span("exec.violations"):
+        with tr.span("exec.json.violations"):
             sums = agg.collect()
-        tr.group("verdicts")
-        with tr.span("exec.verdicts"):
+        tr.group("json.verdicts")
+        with tr.span("exec.json.verdicts"):
             verdicts = res.verdicts.collect()
         dt = time.perf_counter() - t0
         if self.tr.enabled and self.udf_nodes is None:
@@ -241,7 +246,7 @@ class JsonDocs(Workload):
             return [_as_verdicts(verdicts) == exp["verdicts"]
                     and _as_checksums(sums) == exp["checksums"]]
 
-        return Call(dt, exp["rows"], [dt], verify)
+        return Call(dt, exp["rows"], {"json": [dt]}, verify)
 
     def layer_metrics(self, calls):
         return {"json.udf_nodes": self.udf_nodes}
@@ -349,7 +354,7 @@ class CkptBatches(Workload):
             return ok
 
         py4j = [store.py4j_start] + [m["py4j"] for m in store.marks]
-        return Call(dt, exp["rows"], lat, verify, {
+        return Call(dt, exp["rows"], {"checkpoint": lat}, verify, {
             "manifest_s": [m["manifest_s"] for m in store.marks],
             "batch_s": lat[:-1], "global_s": lat[-1],
             "batch_py4j": [b - a for a, b in zip(py4j, py4j[1:])][:-1]})
@@ -418,8 +423,9 @@ class StreamMicrobatch(Workload):
         wall_w, prog_w = self._query("verdicts", verd, "memory", "update")
         data_v = [p for p in prog_v or [] if p.numInputRows > 0]
         data_w = [p for p in prog_w or [] if p.numInputRows > 0]
-        lat = [p.durationMs["triggerExecution"] / 1e3
-               for p in data_v + data_w]
+        lat = {f"stream.{k}": [p.durationMs["triggerExecution"] / 1e3
+                               for p in d]
+               for k, d in (("violations", data_v), ("verdicts", data_w))}
         rows = sum(p.numInputRows for p in data_v + data_w)
         table = f"pb_verdicts_{self.k}"
         exp = self.exp
@@ -480,28 +486,51 @@ class StreamMicrobatch(Workload):
         }
 
 
-class Incremental(Workload):
-    name = "incremental"
+class Composite(Workload):
+    """Runs its parts one after the other in every unit; each part's
+    operations keep their own job-group op number."""
+
+    parts: tuple = ()
 
     def __init__(self, spark, inp: dict, exp: dict, tracer, work: str):
         super().__init__(spark, inp, exp, tracer, work)
-        self.ckpt = CkptBatches(spark, inp["ckpt"], exp["ckpt"], tracer,
-                                work)
-        self.stream = StreamMicrobatch(spark, inp["stream"], exp["stream"],
-                                       tracer, work)
+        self.members = [cls(spark, inp[k], exp[k], tracer, work)
+                        for k, cls in self.parts]
 
     def setup(self) -> None:
-        self.ckpt.setup()
-        self.stream.setup()
+        for m in self.members:
+            m.setup()
 
     def call(self) -> Call:
-        a, b = self.ckpt.call(), self.stream.call()
-        return Call(a.wall_s + b.wall_s, a.rows + b.rows, a.ops + b.ops,
-                    lambda: a.verify() + b.verify(), {**a.layer, **b.layer})
+        calls = []
+        for i, m in enumerate(self.members):
+            if i:
+                self.tr.op += 1
+            calls.append(m.call())
+        ops: dict[str, list[float]] = {}
+        layer: dict = {}
+        for c in calls:
+            ops.update(c.ops)
+            layer.update(c.layer)
+        return Call(sum(c.wall_s for c in calls),
+                    sum(c.rows for c in calls), ops,
+                    lambda: [ok for c in calls for ok in c.verify()], layer)
 
     def layer_metrics(self, calls):
-        return {**self.ckpt.layer_metrics(calls),
-                **self.stream.layer_metrics(calls)}
+        out: dict = {}
+        for m in self.members:
+            out.update(m.layer_metrics(calls))
+        return out
 
 
-WORKLOADS = {w.name: w for w in (SeqFlagship, JsonDocs, Incremental)}
+class Batch(Composite):
+    name = "batch"
+    parts = (("seq_flagship", SeqFlagship), ("json_docs", JsonDocs))
+
+
+class Incremental(Composite):
+    name = "incremental"
+    parts = (("ckpt", CkptBatches), ("stream", StreamMicrobatch))
+
+
+WORKLOADS = {w.name: w for w in (Batch, Incremental)}

@@ -18,7 +18,7 @@ exactly as JSON Schema keywords ignore non-matching types.
 
 Dynamic JSON columns (arbitrary nested values, e.g. a JSON-string props
 column) go through :func:`json_column_predicate` instead — an Arrow-batched
-pandas UDF wrapping the parity interpreter (interp.py).
+pandas UDF running the closure-compiled evaluator (interp_compile.py).
 """
 
 from __future__ import annotations
@@ -606,7 +606,7 @@ def _value_compatible(v: Any, dtype: T.DataType) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# Dynamic JSON columns — Arrow-batched interpreter UDF
+# Dynamic JSON columns — Arrow-batched evaluator UDFs
 # ---------------------------------------------------------------------------
 
 def json_column_predicate(
@@ -616,11 +616,10 @@ def json_column_predicate(
 
     The slow-path escape hatch for truly dynamic payloads (e.g. an
     ``events.props`` JSON column): the spec is CLOSURE-COMPILED once per
-    Python worker (interp_compile.py — the setupValidators analogue,
-    ~2× the re-walking interpreter) and runs once per Arrow batch over
-    ~10k parsed values — never a per-row pyspark UDF.  Unparseable JSON is
-    invalid, matching the reference's empty/garbage handling
-    (validators.go:55-62)."""
+    Python worker (interp_compile.py — the setupValidators analogue) and
+    runs once per Arrow batch over ~10k parsed values — never a per-row
+    pyspark UDF.  Unparseable JSON is invalid, matching the reference's
+    empty/garbage handling (validators.go:55-62)."""
     import json as _json
 
     from go_jsonschema_spark.interp_compile import compile_validator
@@ -661,16 +660,28 @@ def json_column_errors(
     """Pandas UDF: ALL validation errors for a column of JSON strings as
     ``array<string>`` (empty = valid) — the violations-with-details
     counterpart of :func:`json_column_predicate`, mirroring the
-    reference's chained error strings (helpers.go:58-67) but as data."""
+    reference's chained error strings (helpers.go:58-67) but as data.  The
+    same compiled nodes as the predicate, run in error-collecting mode."""
     import json as _json
 
-    from go_jsonschema_spark.interp import validate_instance
+    from go_jsonschema_spark.interp_compile import (
+        collect_errors, compile_validator,
+    )
     from go_jsonschema_spark.spec import SchemaSpec
 
     spec = SchemaSpec(schema)
+    cell: list = []  # compile lazily inside the worker, once
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def _errors(s: pd.Series) -> pd.Series:
+        if not cell:
+            cell.append(
+                compile_validator(
+                    schema, spec=spec, draft=draft,
+                    assert_formats=assert_formats,
+                )
+            )
+        validate = cell[0]
         out = []
         for raw in s:
             if raw is None:
@@ -681,11 +692,7 @@ def json_column_errors(
             except (ValueError, TypeError) as e:
                 out.append([f"$: invalid JSON: {e}"])
                 continue
-            r = validate_instance(
-                schema, v, draft=draft, spec=spec,
-                assert_formats=assert_formats, collect_all=True,
-            )
-            out.append([] if r.valid else r.errors)
+            out.append(collect_errors(validate, v))
         return pd.Series(out)
 
     return _errors

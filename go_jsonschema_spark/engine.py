@@ -193,7 +193,7 @@ def _interp_group_predicate(
     group: tuple[str, ...], full: dict, registry_raw: dict[str, Any],
     draft: int, col: Column,
 ) -> Column:
-    """Interpreter-backed fallback for keyword groups the typed compiler
+    """Evaluator-backed fallback for keyword groups the typed compiler
     refuses (unevaluated*, $recursiveRef/$dynamicRef need annotation
     collection / a dynamic scope no columnar expression carries).
 
@@ -203,23 +203,28 @@ def _interp_group_predicate(
     exactly when the full schema fails but the schema WITHOUT this group
     passes, keeping the per-keyword violation granularity honest.  The
     typed value crosses to the Python worker as JSON inside an Arrow
-    batch and is judged by the closure-compiled interpreter — so valid
-    2019+ specs still plan() instead of raising (ADVICE r2)."""
+    batch and is judged by the closure-compiled evaluator, compiled once
+    per worker — so valid 2019+ specs still plan() instead of raising
+    (ADVICE r2)."""
     import json as _json
+
+    cell: list = []  # (full, rest) validators, compiled inside the worker
 
     @F.pandas_udf(T.BooleanType())
     def _judge(s: pd.Series) -> pd.Series:
-        from go_jsonschema_spark.interp_compile import compile_validator
-        from go_jsonschema_spark.spec import SchemaSpec as _SS
+        if not cell:
+            from go_jsonschema_spark.interp_compile import compile_validator
+            from go_jsonschema_spark.spec import SchemaSpec as _SS
 
-        spec = _SS(full)
-        for k, v in registry_raw.items():
-            spec.registry.setdefault(k, _SS(v))
-        rest = {k: v for k, v in full.items() if k not in group}
-        v_full = compile_validator(full, spec=spec, draft=draft,
-                                   registry=spec.registry)
-        v_rest = compile_validator(rest, spec=spec, draft=draft,
-                                   registry=spec.registry)
+            spec = _SS(full)
+            for k, v in registry_raw.items():
+                spec.registry.setdefault(k, _SS(v))
+            rest = {k: v for k, v in full.items() if k not in group}
+            cell.extend(
+                compile_validator(sch, spec=spec, draft=draft,
+                                  registry=spec.registry)
+                for sch in (full, rest))
+        v_full, v_rest = cell
         out = []
         for raw in s:
             if raw is None:
@@ -291,8 +296,9 @@ class ConstraintSuite:
         is a GATE concept, not row routing; ``split()`` still quarantines
         every failing row.
 
-        ``cnt_for(cid)`` maps a constraint id to its per-partition fail
-        count Column; ``n_rows`` is the partition row count Column."""
+        ``cnt_for(i, cid)`` maps the ``i``-th constraint id to its
+        per-partition fail count Column; ``n_rows`` is the partition row
+        count Column."""
         import functools
         import operator
         from fractions import Fraction
@@ -305,8 +311,8 @@ class ConstraintSuite:
                 "(table checks cannot be tolerated — they are not "
                 "verdict constraints)")
         terms = []
-        for cid in ids:
-            cnt = cnt_for(cid)
+        for i, cid in enumerate(ids):
+            cnt = cnt_for(i, cid)
             m = self.spec.tolerances.get(cid)
             if m is None:
                 terms.append(cnt == 0)
@@ -692,7 +698,7 @@ class ConstraintSuite:
             passed = (
                 self._tolerant_passed(
                     ids,
-                    lambda cid: F.col(f"__n{ids.index(cid)}__"),
+                    lambda i, _cid: F.col(f"__n{i}__"),
                     F.col("n_rows"),
                 )
                 if self.spec.tolerances
@@ -765,7 +771,9 @@ class ConstraintSuite:
 
         tol_fp = tuple(sorted(
             (k, str(v)) for k, v in (self.spec.tolerances or {}).items()))
-        dk = (self.key, partition_col, tol_fp)
+        # tagged like verdict_counts' ("vc", …) key: a key column named
+        # "vc" must not alias the two fragment kinds
+        dk = ("run", self.key, partition_col, tol_fp)
         frag = plan.derived.get(dk)
         if frag is not None:
             return frag
@@ -803,13 +811,13 @@ class ConstraintSuite:
         # round trips each, which cProfile put at ~0.3 s of driver time
         # per run() at 10 constraints (r7); the parsed form is the same
         # expression.
-        def _cid_count(cid: str) -> Column:
+        def _cid_count(i: int, cid: str) -> Column:
             if "'" not in cid and "\\" not in cid:
                 ex = F.expr(f"exists(entries, e -> e.constraint_id = '{cid}')")
             else:  # ids with quote/escape chars keep the lambda builder
                 ex = F.exists(
                     "entries", lambda e: e.getField("constraint_id") == cid)
-            return F.sum(ex.cast("long")).alias(f"__n{ids.index(cid)}__")
+            return F.sum(ex.cast("long")).alias(f"__n{i}__")
 
         fail_map_col = (
             F.map_from_arrays(
@@ -826,7 +834,7 @@ class ConstraintSuite:
             # the partition) coalesces to all-zero counts
             self._tolerant_passed(
                 ids,
-                lambda cid: F.coalesce(
+                lambda _i, cid: F.coalesce(
                     F.element_at("fail_by_constraint", F.lit(cid)),
                     F.lit(0),
                 ),
@@ -845,7 +853,7 @@ class ConstraintSuite:
             rowfail_col=(~F.col("__pass__")).alias("__rowfail__"),
             nfail_agg=F.sum(
                 F.col("__rowfail__").cast("long")).alias("n_fail"),
-            cid_counts=[_cid_count(cid) for cid in ids],
+            cid_counts=[_cid_count(i, cid) for i, cid in enumerate(ids)],
             fail_map_col=fail_map_col,
             verdict_passed=verdict_passed,
         )

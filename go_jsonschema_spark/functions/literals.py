@@ -14,11 +14,12 @@ to the element-wise builder, keeping these helpers drop-in safe.
 
 from __future__ import annotations
 
+import math
 import re
 
 from pyspark.sql import Column, functions as F
 
-__all__ = ["lit_bigints", "lit_strings"]
+__all__ = ["lit_bigints", "lit_doubles", "lit_matrix", "lit_strings"]
 
 _CONTROL = re.compile(r"[\x00-\x1f\x7f]")
 
@@ -34,6 +35,27 @@ def lit_bigints(vals: list[int]) -> Column:
     ):
         return F.expr("array(" + ",".join(f"{v}L" for v in vals) + ")")
     return F.lit(list(vals)).cast("array<bigint>")
+
+
+def lit_doubles(vals: list[float]) -> Column:
+    """Flat ``array<double>`` literal in one parsed expression.
+    ``repr(float)`` is the shortest round-trip form, so Java's parser
+    returns the bit-identical double; non-finite values (no SQL literal
+    syntax) fall back to the element-wise path."""
+    if all(math.isfinite(v) for v in vals):
+        return F.expr(
+            "array(" + ",".join(repr(v) + "D" for v in vals) + ")")
+    return F.array(*[F.lit(v) for v in vals])
+
+
+def lit_matrix(rows: list[list[float]]) -> Column:
+    """Nested ``array<array<double>>`` literal, same contract as
+    :func:`lit_doubles`."""
+    if all(math.isfinite(v) for r in rows for v in r):
+        return F.expr("array(" + ",".join(
+            "array(" + ",".join(repr(v) + "D" for v in r) + ")"
+            for r in rows) + ")")
+    return F.array(*[F.array(*[F.lit(v) for v in r]) for r in rows])
 
 
 def _sql_str(s: str) -> str | None:

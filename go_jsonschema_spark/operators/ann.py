@@ -18,6 +18,9 @@ from __future__ import annotations
 import pandas as pd  # module-level: pandas_udf resolves string type hints
 from pyspark.sql import Column, DataFrame, functions as F
 
+from go_jsonschema_spark.functions.literals import lit_doubles, lit_matrix
+from go_jsonschema_spark.operators.dedup import _dot, _norm
+
 __all__ = [
     "topk_cosine",
     "topk_cosine_many",
@@ -36,23 +39,14 @@ __all__ = [
 
 
 def _dot_lit(vec: Column, q: list[float]) -> Column:
-    # ONE array literal node (see _lit_doubles), not a CreateArray of
+    # ONE array literal node (see lit_doubles), not a CreateArray of
     # len(q) scalar literals: the value is identical, but an unrolled
     # 64-element array costs ~65 plan nodes + a py4j round trip per
     # element, and analyzer time is super-linear in plan size — with 16
     # centroids the argmin expression alone cost ~1.1 s of pure driver
     # time per query at sf0.1 (measured r7; guide §7.3 "planning very
     # large expression trees").
-    return F.aggregate(
-        F.zip_with(vec, _lit_doubles([float(x) for x in q]),
-                   lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+    return _dot(vec, lit_doubles([float(x) for x in q]))
 
 
 def cosine_to(vec: Column, q: list[float]) -> Column:
@@ -320,33 +314,6 @@ def kmeans_centroids(
     return cent
 
 
-def _lit_doubles(vals: list[float]) -> Column:
-    """A flat ``array<double>`` literal as ONE parsed SQL expression.
-    ``F.lit(x)`` per element costs a py4j round trip each (a 16×64
-    matrix ≈ 1000 round trips ≈ 0.4 s of pure driver time per query,
-    measured r7); ``repr(float)`` is the shortest round-trip form, so
-    Java's parser returns the bit-identical double.  Non-finite values
-    fall back to the element-wise path (no SQL literal syntax)."""
-    import math
-
-    if all(math.isfinite(v) for v in vals):
-        return F.expr(
-            "array(" + ",".join(repr(v) + "D" for v in vals) + ")")
-    return F.array(*[F.lit(v) for v in vals])
-
-
-def _lit_matrix(rows: list[list[float]]) -> Column:
-    """Nested ``array<array<double>>`` literal, same contract as
-    :func:`_lit_doubles`."""
-    import math
-
-    if all(math.isfinite(v) for r in rows for v in r):
-        return F.expr("array(" + ",".join(
-            "array(" + ",".join(repr(v) + "D" for v in r) + ")"
-            for r in rows) + ")")
-    return F.array(*[F.array(*[F.lit(v) for v in r]) for r in rows])
-
-
 def _centroid_scores(vec: Column, centroids) -> Column:
     """``array<double>`` of per-centroid scores ``-2·v·c + ||c||²``
     built from TWO literal nodes (the centroid matrix as one nested
@@ -358,8 +325,8 @@ def _centroid_scores(vec: Column, centroids) -> Column:
     per query at 16×64, measured r7 — guide §7.3) to O(1)."""
     import numpy as np
 
-    mat = _lit_matrix([[float(x) for x in c] for c in centroids])
-    ccs = _lit_doubles([float(np.dot(c, c)) for c in centroids])
+    mat = lit_matrix([[float(x) for x in c] for c in centroids])
+    ccs = lit_doubles([float(np.dot(c, c)) for c in centroids])
     return F.zip_with(
         mat, ccs,
         lambda c, cc: F.lit(-2.0) * F.aggregate(
@@ -675,11 +642,6 @@ def label_centroid_similarity(
     a = cent.select(F.col("l").alias("label_a"), F.col("c").alias("ca"))
     b = cent.select(F.col("l").alias("label_b"), F.col("c").alias("cb"))
     pairs = a.join(b, F.col("label_a") < F.col("label_b"))
-
-    def _dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda u, v: u * v),
-            F.lit(0.0), lambda acc, t: acc + t)
 
     cos = _dot(F.col("ca"), F.col("cb")) / (
         F.sqrt(_dot(F.col("ca"), F.col("ca")))

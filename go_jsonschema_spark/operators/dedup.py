@@ -970,14 +970,14 @@ def embedding_cosine_pairs(
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((n_planes, dim))
 
-    from go_jsonschema_spark.operators.ann import _lit_doubles
+    from go_jsonschema_spark.functions.literals import lit_doubles
 
     vec = F.col(vec_col)
     bucket = F.lit(0).cast("long")
     for i in range(n_planes):
         # one parsed literal per plane (vs dim py4j round trips each —
-        # the r7 _lit_doubles rationale; identical doubles via repr)
-        lit_plane = _lit_doubles([float(x) for x in planes[i]])
+        # the r7 lit_doubles rationale; identical doubles via repr)
+        lit_plane = lit_doubles([float(x) for x in planes[i]])
         bit = F.when(_dot(vec, lit_plane) > 0, F.lit(1).cast("long")).otherwise(
             F.lit(0).cast("long")
         )

@@ -470,9 +470,13 @@ def token_ngram_heavy_hitters(
     # ---- phase 3: certificate — N windows vs the k-th candidate count
     # (n_windows arrives with the recount job via the Observation)
     rows = top.collect()
-    n_windows = obs.get["nw"] or 0
-    kth = rows[-1]["cnt"] if len(rows) >= k else 0
-    exact = bool(len(rows) >= k and kth * capacity > n_windows)
+    full = len(rows) >= k
+    # only a full top-k needs the window total.  With fewer rows (empty
+    # input, or every sequence shorter than n) the plan can finish without
+    # running the observed node, and reading the Observation then fails
+    n_windows = (obs.get["nw"] or 0) if full else 0
+    kth = rows[-1]["cnt"] if full else 0
+    exact = bool(full and kth * capacity > n_windows)
 
     # unpack codes into token-id columns; deterministic rank
     out_rows = []

@@ -11,7 +11,8 @@ Design choice vs the reference: the reference materializes a recursive
 (/root/reference/schema.go:31-179).  Here a schema stays a JSON-shaped dict
 ("spec") — lossless round-trip (unknown keywords preserved, like
 /root/reference/parser.go:90-99) comes for free, and the compile step
-(compile.py) and interpreter (interp.py) consume the dict directly.
+(compile.py) and the dynamic-JSON evaluator (interp_compile.py) consume
+the dict directly.
 """
 
 from __future__ import annotations

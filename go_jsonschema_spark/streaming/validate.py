@@ -329,7 +329,7 @@ def windowed_verdicts(
         passed = (
             suite._tolerant_passed(
                 ids,
-                lambda cid: F.col(f"__n{ids.index(cid)}__"),
+                lambda i, _cid: F.col(f"__n{i}__"),
                 F.col("n_rows"),
             )
             if suite.spec.tolerances

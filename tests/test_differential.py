@@ -3,8 +3,11 @@
 1. Hypothesis over the pure-Python semantics kernel: ``deep_equal`` /
    ``canonical_key`` consistency, validator robustness (never raises,
    collect_all doesn't change the verdict), spec JSON round-trip.
-2. Seeded random schema×value differential: the typed Catalyst compiler
-   must agree with the parity interpreter on every generated case —
+2. The dynamic-JSON evaluator against an independent oracle, the
+   installed ``jsonschema`` package (Draft7Validator and
+   Draft202012Validator), over generated applicator schemas.
+3. Seeded random schema×value differential: the typed Catalyst compiler
+   must agree with the dynamic-JSON evaluator on every generated case —
    batched into a handful of Spark jobs (one per column type), not one
    job per example.
 """
@@ -22,6 +25,7 @@ from go_jsonschema_spark.interp import (
     deep_equal,
     validate_instance,
 )
+from go_jsonschema_spark.interp_compile import compile_validator
 
 json_scalars = st.one_of(
     st.none(),
@@ -73,20 +77,44 @@ _KEYWORDS = st.fixed_dictionaries(
 )
 
 
+def _oracle(draft: int):
+    """The independent reference: the installed ``jsonschema`` package.
+    Draft 2019-09 is not used — its validator disagrees with the 2019-09
+    annotation rules on additionalProperties and crashes on
+    ``{"allOf": [{"items": false}], "unevaluatedItems": false}``."""
+    jsonschema = pytest.importorskip("jsonschema")
+    return {7: jsonschema.Draft7Validator,
+            2020: jsonschema.Draft202012Validator}[draft]
+
+
 @given(_KEYWORDS, json_values)
 @settings(max_examples=300, deadline=None)
 def test_validator_total_and_consistent(schema, value):
-    """The interpreter is total (no exceptions on any JSON input),
-    collect_all doesn't change the verdict, and the closure-compiled
-    validator agrees with the interpreter."""
-    from go_jsonschema_spark.interp_compile import compile_validator
-
+    """The evaluator is total (no exceptions on any JSON input), the
+    boolean and error-collecting runs of the same compiled nodes agree,
+    errors are reported exactly for invalid values, and the verdict is
+    the oracle's."""
     fast = validate_instance(schema, value)
     full = validate_instance(schema, value, collect_all=True)
-    assert fast.valid == full.valid
-    if not full.valid:
-        assert full.errors
-    assert compile_validator(schema)(value) == fast.valid
+    assert fast.valid == full.valid == compile_validator(schema)(value)
+    assert bool(full.errors) == (not full.valid)
+    assert fast.errors == full.errors[:1]
+    if "multipleOf" in schema and isinstance(value, float) and \
+            abs(value) >= 2**53:
+        # the oracle divides in binary floating point, whose quotient is
+        # always integral up there; the evaluator divides the exact
+        # decimal value (the reference's big.Rat), pinned below
+        return
+    assert full.valid == _oracle(7)(schema).is_valid(value)
+
+
+def test_multiple_of_divides_the_exact_decimal_value():
+    """1.4490466548765422e+24 / 1.5 is not an integer, although the
+    binary floating-point quotient is."""
+    assert not validate_instance({"multipleOf": 1.5},
+                                 1.4490466548765422e+24).valid
+    assert validate_instance({"multipleOf": 0.5},
+                             1.4490466548765422e+24).valid
 
 
 @given(_KEYWORDS)
@@ -99,7 +127,7 @@ def test_spec_json_roundtrip(schema):
 
 
 # ---------------------------------------------------------------------------
-# compile vs interp differential on Spark
+# typed compiler vs dynamic-JSON evaluator differential on Spark
 # ---------------------------------------------------------------------------
 
 def _rand_schema(rng: random.Random, dtype: str) -> dict:
@@ -239,7 +267,7 @@ def _rand_map_value(rng: random.Random):
 
 
 def test_compile_matches_interp_maps(spark):
-    """Object-typed (MapType) compile path vs interpreter — 200 randomized
+    """Object-typed (MapType) compile path vs evaluator — 200 randomized
     cases covering required/properties/patternProperties/
     additionalProperties/propertyNames/min-maxProperties/dependentRequired."""
     from pyspark.sql import functions as F, types as T
@@ -280,7 +308,7 @@ def test_compile_matches_interp_maps(spark):
 
 def test_compile_matches_interp_structs(spark):
     """StructType compile path: required + per-field properties + counted
-    min/maxProperties vs the interpreter (missing struct field == SQL NULL
+    min/maxProperties vs the evaluator (missing struct field == SQL NULL
     == absent JSON key)."""
     from pyspark.sql import functions as F, types as T
 
@@ -351,7 +379,7 @@ def test_compile_matches_interp_structs(spark):
 ])
 def test_compile_matches_interp_random(spark, dtype, spark_type):
     """200 random (schema, value) pairs per column type: the native Column
-    predicate and the interpreter must produce the same verdict.  One Spark
+    predicate and the evaluator must produce the same verdict.  One Spark
     job per type (when-chain over schema index)."""
     from pyspark.sql import functions as F, types as T
 
@@ -453,10 +481,69 @@ _APPLICATOR_SCHEMAS = st.recursive(
 def test_annotated_evaluator_agrees_with_plain_path(schema, value):
     """Wrapping any schema as {allOf:[S], unevaluated*: true} is
     semantically vacuous (true accepts every unevaluated member) but
-    forces the annotation-collecting evaluator — verdicts must match the
-    plain path keyword-for-keyword at 2019 semantics."""
-    want = validate_instance(schema, value, draft=2019).valid
+    compiles S with annotation collection — the verdict must match the
+    plain compilation of S and the oracle."""
+    want = _oracle(2020)(schema).is_valid(value)
+    assert compile_validator(schema, draft=2020)(value) == want
     for marker in ("unevaluatedProperties", "unevaluatedItems"):
         wrapped = {"allOf": [schema], marker: True}
-        got = validate_instance(wrapped, value, draft=2019).valid
-        assert got == want, (schema, value, marker)
+        assert compile_validator(wrapped, draft=2020)(value) == want, marker
+
+
+# keywords that do not exist before 2019-09
+_LATER_KEYWORDS = ("prefixItems", "dependentSchemas", "minContains")
+
+
+def _without(schema, keywords):
+    if isinstance(schema, list):
+        return [_without(s, keywords) for s in schema]
+    if not isinstance(schema, dict):
+        return schema
+    return {k: _without(v, keywords) for k, v in schema.items()
+            if k not in keywords}
+
+
+@given(_APPLICATOR_SCHEMAS, json_values, st.sampled_from([7, 2020]),
+       st.sampled_from(["unevaluatedProperties", "unevaluatedItems"]))
+@settings(max_examples=250, deadline=None)
+def test_evaluator_matches_jsonschema(schema, value, draft, marker):
+    """Every generated schema, wrapped behind an unevaluated* keyword and
+    behind a ``$ref`` with a sibling, gets the oracle's verdict from both
+    the boolean and the error-collecting run.  Draft 7 ignores both
+    unevaluated* (unknown there) and the ``$ref`` sibling; 2020-12
+    applies both."""
+    if draft == 7:
+        schema = _without(schema, _LATER_KEYWORDS)
+    for wrapped in (
+        {"allOf": [schema], marker: False},
+        {"$defs": {"s": schema}, "$ref": "#/$defs/s", "minProperties": 1},
+    ):
+        want = _oracle(draft)(wrapped).is_valid(value)
+        assert compile_validator(wrapped, draft=draft)(value) == want, wrapped
+        full = validate_instance(wrapped, value, draft=draft, collect_all=True)
+        assert full.valid == want, (wrapped, full.errors)
+
+
+_REF_WITH_SIBLING = {"$defs": {"a": {"type": "integer"}}, "$ref": "#/$defs/a",
+                     "maximum": 5}
+
+
+@pytest.mark.parametrize("draft", [2019, 2020])
+def test_ref_applies_beside_its_siblings_from_2019(draft):
+    """From 2019-09 on, ``$ref`` is an in-place applicator: ``maximum``
+    beside it still applies (up to draft 7 the ref replaces it)."""
+    assert compile_validator(_REF_WITH_SIBLING, draft=draft)(9) is False
+    assert compile_validator(_REF_WITH_SIBLING, draft=draft)(3) is True
+    assert compile_validator(_REF_WITH_SIBLING, draft=7)(9) is True
+
+
+@pytest.mark.parametrize("draft", [2019, 2020])
+def test_ref_with_sibling_in_json_column_udf(spark, draft):
+    from pyspark.sql import functions as F
+
+    from go_jsonschema_spark.compile import json_column_predicate
+
+    df = spark.createDataFrame([("9",), ("3",)], "j string")
+    pred = json_column_predicate(_REF_WITH_SIBLING, draft=draft)
+    got = [r[0] for r in df.select(pred(F.col("j"))).collect()]
+    assert got == [False, True]

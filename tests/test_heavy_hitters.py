@@ -78,3 +78,16 @@ def test_param_validation(spark):
         token_ngram_heavy_hitters(df, n=5)
     with pytest.raises(ValueError, match="k must be"):
         token_ngram_heavy_hitters(df, k=100, capacity=10)
+
+
+@pytest.mark.parametrize("rows", [
+    [],  # empty input
+    [("a", [1]), ("b", [2, 3])],  # every sequence shorter than n
+])
+def test_fewer_than_k_windows_returns_partial_uncertified(spark, rows):
+    """With fewer than k candidates the recount may never run its observed
+    node; the result is the (possibly empty) uncertified top list, not a
+    crash reading the Observation."""
+    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>")
+    out = token_ngram_heavy_hitters(df, n=3, k=2, capacity=64)
+    assert out.collect() == []

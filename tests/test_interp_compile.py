@@ -1,7 +1,6 @@
-"""The closure-compiled validator must reproduce the interpreter exactly:
-the full official suite (mandatory drafts 4/6/7 + optional format/bignum/
-content + refRemote via registry + the 2019/2020 keyword files) through
-``compile_validator``."""
+"""The closure-compiled evaluator against the full official suite
+(mandatory drafts 4/6/7 + optional format/bignum/content + refRemote via
+registry + the 2019/2020 keyword files) through ``compile_validator``."""
 
 from __future__ import annotations
 
@@ -76,12 +75,15 @@ def test_compiled_refremote_and_content():
 
 
 def test_compiled_faster_than_interp():
-    """The point of compiling: beat per-value schema re-walking.  Not a
-    strict benchmark (host is noisy) — just assert it's not slower."""
+    """The point of compiling: a schema compiled once beats compiling it
+    again for every value (``validate_instance``).  Not a strict
+    benchmark (host is noisy) — just assert it's not slower.  Verdicts
+    come from the jsonschema oracle."""
     import time
 
     from go_jsonschema_spark.interp import validate_instance
 
+    jsonschema = pytest.importorskip("jsonschema")
     schema = {
         "type": "object",
         "required": ["k"],
@@ -96,5 +98,6 @@ def test_compiled_faster_than_interp():
     t0 = time.time()
     b = [validate_instance(schema, v, spec=spec).valid for v in values]
     t_i = time.time() - t0
-    assert a == b
+    oracle = jsonschema.Draft7Validator(schema)
+    assert a == b == [oracle.is_valid(v) for v in values]
     assert t_c <= t_i * 1.2, (t_c, t_i)

@@ -1,5 +1,5 @@
 """run()-fragment caching (round 7): derived Columns are memoized on the
-cached ConstraintPlan keyed by (key, partition_col, tolerances).  Two
+cached ConstraintPlan keyed by ("run", key, partition_col, tolerances).  Two
 suites whose specs differ ONLY in fields outside the plan fingerprint
 (tolerances, key) share one cached plan — these tests pin that the
 fragment memo cannot leak verdict gates or doc_id columns across them,
@@ -81,7 +81,7 @@ def test_repeated_runs_hit_fragment_memo_with_identical_results(spark):
     suite = ConstraintSuite(_spec(), key="doc_id")
     r1 = suite.run(df, partition_col="part")
     plan = suite.compile(df)
-    dk = ("doc_id", "part", ())  # (key, partition_col, tolerances)
+    dk = ("run", "doc_id", "part", ())  # tag, key, partition_col, tol
     frag = plan.derived[dk]  # fragments memoized on first run
     assert isinstance(frag, eng._RunFragments)
 
@@ -94,3 +94,20 @@ def test_repeated_runs_hit_fragment_memo_with_identical_results(spark):
     got1 = sorted(map(tuple, r1.violations.collect()))
     got2 = sorted(map(tuple, r2.violations.collect()))
     assert got1 == got2 == [("b", "v.minimum", "-1"), ("d", "pos", "500")]
+
+
+def test_key_column_named_vc_does_not_alias_verdict_counts(spark):
+    """run()'s fragment memo key is tagged apart from verdict_counts'
+    ("vc", …) key, so a key column literally named "vc" cannot make
+    run() pick up the counts-only fragments."""
+    from go_jsonschema_spark.engine import ConstraintSuite
+
+    df = _df(spark).withColumnRenamed("doc_id", "vc")
+    suite = ConstraintSuite(_spec(), key="vc")
+    counts = {r["partition"]: (r["n_rows"], r["n_fail"], r["passed"])
+              for r in suite.verdict_counts(df).collect()}
+    res = suite.run(df)
+    got = {r["partition"]: (r["n_rows"], r["n_fail"], r["passed"])
+           for r in res.verdicts.collect()}
+    assert got == counts == {"__all__": (5, 2, False)}
+    assert sorted(r["doc_id"] for r in res.violations.collect()) == ["b", "d"]
